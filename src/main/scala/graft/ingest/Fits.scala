@@ -1,7 +1,9 @@
 package graft.ingest
 
+import java.net.URI
 import java.nio.ByteBuffer
 import java.util.zip.GZIPInputStream
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -195,6 +197,20 @@ object Fits {
     case 'L' => BooleanType
   }
 
+  /** Parsed HDUs of the schema probe: the lexically smallest file in the
+    * binaryFile frame's listing. `inputFiles` is the driver-side listing
+    * and the bytes are read through the Hadoop FileSystem on the driver,
+    * so the probe runs no Spark job and does not depend on how the files
+    * are packed into partitions. */
+  private def probeHdus(spark: SparkSession, files: DataFrame, glob: String): Seq[Hdu] = {
+    val paths = files.inputFiles
+    require(paths.nonEmpty, s"no files match $glob")
+    val path = new Path(new URI(paths.min))
+    val in = path.getFileSystem(spark.sparkContext.hadoopConfiguration).open(path)
+    val bytes = try in.readAllBytes() finally in.close()
+    parseHdus(gunzipIfNeeded(bytes))
+  }
+
   /** S6 jitter-style reader (reference: cosmo/filesystem.py:196–227): one
     * output row per (file, extension) whose EXTNAME matches, carrying the
     * file path, requested PRIMARY header keys, requested per-extension
@@ -204,13 +220,9 @@ object Fits {
                         tableColumns: Seq[String]): DataFrame = {
     val files = spark.read.format("binaryFile").load(glob)
       .select("path", "content")
-    // collect-bound: limit(1) schema probe - one file's bytes
-    val first = files.limit(1).collect()
-    require(first.nonEmpty, s"no files match $glob")
-    val probeBytes = gunzipIfNeeded(first.head.getAs[Array[Byte]]("content"))
-    val probeHdus = parseHdus(probeBytes)
-    val probeExt = probeHdus.find(_.header.get("EXTNAME").contains(extName))
-      .getOrElse(throw new IllegalArgumentException(s"no $extName extension in first file"))
+    val probeExt = probeHdus(spark, files, glob)
+      .find(_.header.get("EXTNAME").contains(extName))
+      .getOrElse(throw new IllegalArgumentException(s"no $extName extension in probe file"))
     val specByName = tableCols(probeExt).map(s => s.name -> s).toMap
     val schema = StructType(
       StructField("path", StringType) +: StructField("ext_index", IntegerType) +:
@@ -251,22 +263,16 @@ object Fits {
     * the reference's `{key}_{ext}` renaming (filesystem.py:74–82).
     * Missing header keys yield null (reference: per-key defaults).
     *
-    * Schema is inferred driver-side from the first file; all files of one
-    * product type share the layout (as in the reference's per-model
-    * requests). */
+    * Schema is inferred driver-side from one probe file (`probeHdus`);
+    * all files of one product type share the layout (as in the
+    * reference's per-model requests). */
   def exposures(spark: SparkSession, glob: String,
                 headerReq: Map[Int, Seq[String]],
                 tableReq: Map[Int, Seq[String]]): DataFrame = {
     import scala.jdk.CollectionConverters._
     val files = spark.read.format("binaryFile").load(glob)
       .select("path", "content")
-
-    // schema from the first file
-    // collect-bound: limit(1) schema probe - one file's bytes
-    val first = files.limit(1).collect()
-    require(first.nonEmpty, s"no files match $glob")
-    val probeBytes = gunzipIfNeeded(first.head.getAs[Array[Byte]]("content"))
-    val probeHdus = parseHdus(probeBytes)
+    val probe = probeHdus(spark, files, glob)
     val fields = Seq.newBuilder[StructField]
     val used = scala.collection.mutable.Set[String]("path")
     def fieldName(base: String, ext: Int): String =
@@ -280,7 +286,7 @@ object Fits {
       }
     }
     val tablePlan = tableReq.toSeq.sortBy(_._1).flatMap { case (ext, names) =>
-      val specs = tableCols(probeHdus(ext)).map(s => s.name -> s).toMap
+      val specs = tableCols(probe(ext)).map(s => s.name -> s).toMap
       names.map { n =>
         val spec = specs.getOrElse(n, throw new IllegalArgumentException(
           s"column $n not in extension $ext of $glob"))

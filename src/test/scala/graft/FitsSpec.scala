@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import graft.ingest.Fits
 
 /** FITS reader against the reference repo's real exposure products.
@@ -67,15 +68,53 @@ class FitsSpec extends SparkSpec {
     assert(out.select("DETECTOR").distinct().as[String].collect().toSeq == Seq("FUV"))
   }
 
+  // hand-built FITS: 80-char cards in 2880-byte blocks
+  private def card(k: String, v: String): String = (k.padTo(8, ' ') + "= " + v).padTo(80, ' ')
+  private def block(cards: Seq[String]): Array[Byte] = {
+    val s = (cards :+ "END".padTo(80, ' ')).mkString
+    (s + " " * ((2880 - s.length % 2880) % 2880)).getBytes("US-ASCII")
+  }
+
+  test("schema probe: the lexically smallest file, read on the driver without a Spark job") {
+    // two single-column BINTABLE files whose X column differs in type;
+    // b.fits is the larger, so it is the first file of the first
+    // partition (files are packed largest first)
+    def fits(form: String, width: Int, rows: Int): Array[Byte] = {
+      val data = new Array[Byte](width * rows)
+      block(Seq(card("SIMPLE", "T"), card("BITPIX", "8"), card("NAXIS", "0"))) ++
+        block(Seq(card("XTENSION", "'BINTABLE'"), card("BITPIX", "8"), card("NAXIS", "2"),
+          card("NAXIS1", width.toString), card("NAXIS2", rows.toString),
+          card("PCOUNT", "0"), card("GCOUNT", "1"), card("TFIELDS", "1"),
+          card("EXTNAME", "'EVENTS'"), card("TTYPE1", "'X'"), card("TFORM1", s"'$form'"))) ++
+        data ++ new Array[Byte]((2880 - data.length % 2880) % 2880)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("fits_probe")
+    java.nio.file.Files.write(dir.resolve("a.fits"), fits("1E", 4, 1))
+    java.nio.file.Files.write(dir.resolve("b.fits"), fits("1D", 8, 1000))
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graft.ListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    val (exp, ext) = try {
+      val built = (Fits.exposures(spark, s"$dir/*.fits", Map(0 -> Seq("SIMPLE")), Map(1 -> Seq("X"))),
+        Fits.perExtensionTable(spark, s"$dir/*.fits", "EVENTS", Seq.empty, Seq.empty, Seq("X")))
+      org.apache.spark.sql.graft.ListenerBridge.drain(sc)
+      built
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0, "building the frames ran a Spark job")
+    assert(exp.schema("X").dataType == ArrayType(FloatType, containsNull = false))
+    assert(ext.schema("X").dataType == ArrayType(FloatType, containsNull = false))
+  }
+
   test("variable-length (P/Q descriptor) columns decode through the heap") {
     import java.nio.ByteBuffer
     // hand-built minimal FITS: empty primary + BINTABLE with 2 rows of
     // (1J fixed, 1PE(3) var floats, 1PA(8) var string, 1QD(2) var doubles)
-    def card(k: String, v: String): String = (k.padTo(8, ' ') + "= " + v).padTo(80, ' ')
-    def block(cards: Seq[String]): Array[Byte] = {
-      val s = (cards :+ "END".padTo(80, ' ')).mkString
-      (s + " " * ((2880 - s.length % 2880) % 2880)).getBytes("US-ASCII")
-    }
     val primary = block(Seq(card("SIMPLE", "T"), card("BITPIX", "8"), card("NAXIS", "0")))
     val rowLen = 4 + 8 + 8 + 16                       // J + P + P + Q
     val heap = new java.io.ByteArrayOutputStream()
